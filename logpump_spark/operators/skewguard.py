@@ -93,12 +93,11 @@ def ranged_blocks(
     default retires).  Measured at the k=64 hot twin the checkpoint is
     wall-NEUTRAL-to-faster: the upstream scan + shuffle runs ONCE
     instead of twice, which pays for writing the blocks (numbers in
-    SCALING.md §4.1).  r16: the checkpoint is planned with AQE
-    disabled (operators/materialize.py), so ``eager=False`` genuinely
-    defers execution — the range shuffle runs at the consumers' FIRST
-    ACTION, inside the bench's timed window, not at plan build (it
-    used to run at the checkpoint call because AdaptiveSparkPlanExec
-    materializes its stages eagerly).  Exactness is unchanged: both
+    SCALING.md §4.1).  The checkpoint is planned with AQE on
+    (operators/materialize.py), so even with ``eager=False`` the range
+    shuffle runs at the checkpoint call, during plan construction:
+    AdaptiveSparkPlanExec materializes its stages eagerly.  Callers
+    that time a query must start the clock before construction.  Both
     consumers read ONE checkpointed RDD whose range bounds are sampled
     once by its single shuffle dependency.
 

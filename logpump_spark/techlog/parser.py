@@ -8,14 +8,14 @@ Faithful to /root/reference/internal/parser/*.go, field by field:
   is itself dropped from the output (sql_extractor.go:30-37: the escape
   byte is never written) — regex equivalent: capture ``(?:[^q\\]|\\.)*``
   then strip the backslashes with a second regexp_replace
-- embedded ``YYYY-MM-DD HH:MM:SS`` literals scrubbed from SQL, then trim
-  (sql_extractor.go:14, 25-27, 41-43); unterminated quote keeps the whole
-  tail (sql_extractor.go:40-44)
+- embedded ``YYYY-MM-DD HH:MM:SS`` literals scrubbed from SQL, then
+  TrimSpace (sql_extractor.go:14, 25-27, 41-43); unterminated quote keeps
+  the whole tail (sql_extractor.go:40-44)
 - Context = substring after the first ``,Context='`` up to the LAST single
   quote; no closing quote keeps the whole tail (context_extractor.go:6-17)
 - positional header: fields 0/1/2 are LogTimestamp/Component/Severity
-  (space-trimmed); remaining comma parts split on the FIRST '=' with key
-  space-trimmed and value trimmed of spaces AND single quotes
+  (TrimSpace); remaining comma parts split on the FIRST '=' with key
+  TrimSpace'd and value trimmed of spaces AND single quotes
   (parser.go:68-88); duplicate keys: last wins (Go map overwrite)
 - silent numeric parses: Go strconv with the error DISCARDED
   (parser.go:98-116).  Syntax errors yield 0 (Go returns 0 with
@@ -29,9 +29,15 @@ Go's last-duplicate-wins map overwrite (parser.go:84) is expressed by
 dropping earlier duplicates from the entries array before
 map_from_entries, instead of mutating spark.sql.mapKeyDedupPolicy on a
 possibly-shared session.
+
+Two Java-regex traps are avoided on purpose: ``$`` also matches before
+a FINAL line terminator (so anchors use ``\\z``), and ``.`` skips line
+terminators unless ``(?s)`` is set.  Go has neither quirk.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,6 +45,14 @@ from pyspark.sql import functions as F
 _U8_MAX = 255
 _U32_MAX = 4_294_967_295
 _I32_MIN, _I32_MAX = -2_147_483_648, 2_147_483_647
+
+# Go's unicode.IsSpace set, which strings.TrimSpace strips; Spark's
+# one-argument trim strips only ' '
+_GO_SPACE = (
+    "\t\n\v\f\r \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
 
 # keys projected out of the header map (parser.go:17-43); everything else
 # is silently dropped, missing keys default to '' (parser.go:91-96)
@@ -71,7 +85,7 @@ def parse_uint(s: Column, max_value: int) -> Column:
     they saturate to long max instead of Go's MaxUint64 — documented
     divergence, unreachable for real 1C ids."""
     n = s.try_cast("long")
-    digits = s.rlike("^[0-9]+$")
+    digits = s.rlike(r"^[0-9]+\z")
     in_range = n.isNotNull() & (n <= max_value)
     return (
         F.when(digits & in_range, n)
@@ -86,7 +100,7 @@ def parse_int32(s: Column) -> Column:
     sign; syntax error -> 0; range overflow saturates to MaxInt32 /
     MinInt32 by sign (Go's ErrRange value)."""
     n = s.try_cast("long")
-    syntax = s.rlike("^[+-]?[0-9]+$")
+    syntax = s.rlike(r"^[+-]?[0-9]+\z")
     in_range = n.isNotNull() & (n >= _I32_MIN) & (n <= _I32_MAX)
     return (
         F.when(syntax & in_range, n)
@@ -97,106 +111,106 @@ def parse_int32(s: Column) -> Column:
     )
 
 
-def _scrub_sql(sql: Column) -> Column:
-    """Timestamp scrub + trim (sql_extractor.go:14, 25-27)."""
-    return F.trim(
-        F.regexp_replace(sql, r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}", "")
-    )
+def _trim_space(s: Column) -> Column:
+    """Go strings.TrimSpace."""
+    return F.trim(s, F.lit(_GO_SPACE))
 
 
-def _unescape(s: Column) -> Column:
-    """Drop escape backslashes: Go's scanner never writes the escape byte
-    (sql_extractor.go:30-37)."""
-    return F.regexp_replace(s, r"\\(.)", "$1")
+def _sql_scan(rest: Column, quote: Column) -> Column:
+    """``rest`` up to AND including its closing quote; '' when the quote
+    is unterminated or the delimiter is neither ' nor " (both fall back
+    to "no closing quote" = the whole tail).  The match is ^-anchored,
+    so one regex run yields the SQL (all but the last char), whether it
+    closed (non-empty) and the remainder (by position)."""
 
-
-def split_record(rec: Column) -> tuple[Column, Column, Column]:
-    """-> (header_part, sql_text, context_text), per ParseLogRecord
-    (parser.go:50-66)."""
-    sql_idx = F.instr(rec, "Sql=")  # first occurrence, 1-based, 0 if absent
-    has_sql = sql_idx > 0
-    header_part = F.when(has_sql, rec.substr(F.lit(1), sql_idx - 1)).otherwise(rec)
-
-    quote = rec.substr(sql_idx + F.lit(4), F.lit(1))  # '' when at end of record
-    rest = rec.substr(sql_idx + F.lit(5), F.length(rec))
-
-    # Escape-aware scan to the closing quote.  The quote delimiter is
-    # whatever char follows 'Sql=' (almost always '); supported explicitly
-    # for ' and ", anything else falls back to "no closing quote" = rest.
-    def _sql_and_after(q: str) -> tuple[Column, Column]:
+    def pat(q: str) -> str:
         qe = "\\" + q
         # "unrolled loop" form [^q\]*(?:\.[^q\]*)* instead of the per-char
         # alternation (?:[^q\]|\.)* — same language, linear-time on Java's
         # backtracking regex engine instead of alternation-per-character
         body = r"[^" + qe + r"\\]*(?:\\.[^" + qe + r"\\]*)*"
-        pat = r"(?s)^(" + body + r")" + qe
-        # the match is ^-anchored, so the remainder after the closing
-        # quote is POSITIONAL: rest = raw + quote + after.  Deriving it
-        # by substr instead of a second capture halves the regex runs
-        # per record (this scan is the ingest hot path).
-        raw = F.regexp_extract(rest, pat, 1)
-        after = rest.substr(F.length(raw) + F.lit(2), F.length(rest))
-        closed = rest.rlike(pat)
-        return (
-            F.when(closed, raw).otherwise(rest),
-            F.when(closed, after).otherwise(F.lit("")),
-        )
+        return r"(?s)^(" + body + qe + r")"
 
-    sq_sql, sq_after = _sql_and_after("'")
-    dq_sql, dq_after = _sql_and_after('"')
-    raw_sql = (
-        F.when(quote == "'", sq_sql).when(quote == '"', dq_sql).otherwise(rest)
-    )
-    after_sql = (
-        F.when(quote == "'", sq_after).when(quote == '"', dq_after).otherwise(F.lit(""))
+    return (
+        F.when(quote == "'", F.regexp_extract(rest, pat("'"), 1))
+        .when(quote == '"', F.regexp_extract(rest, pat('"'), 1))
+        .otherwise(F.lit(""))
     )
 
-    sql_text = F.when(has_sql & (F.length(rec) >= sql_idx + 4), _scrub_sql(_unescape(raw_sql))).otherwise(F.lit(""))
 
-    # Context comes from the remainder after SQL, or the whole record when
-    # there is no Sql= marker (parser.go:53-54, :65)
-    ctx_source = F.when(has_sql, after_sql).otherwise(rec)
-    ctx_idx = F.instr(ctx_source, ",Context='")
-    ctx_tail = ctx_source.substr(ctx_idx + F.lit(10), F.length(ctx_source))
-    # to the LAST quote (context_extractor.go:12); none -> whole tail.
-    # last-quote position via reverse+instr — one linear pass instead of
-    # the greedy (?s)^(.*)' regex (full scan + backtrack per record)
-    last_q = F.length(ctx_tail) - F.instr(F.reverse(ctx_tail), "'") + 1
-    ctx = F.when(
-        ctx_tail.contains("'"), ctx_tail.substr(F.lit(1), last_q - 1)
-    ).otherwise(ctx_tail)
-    context_text = F.when(ctx_idx > 0, ctx).otherwise(F.lit(""))
-    # no-Sql= + empty-after-marker edge: Sql= at very end of record
-    context_text = F.when(
-        has_sql & (F.length(rec) < sql_idx + 4), F.lit("")
-    ).otherwise(context_text)
-
-    return header_part, sql_text, context_text
+def _sql_text(rec: Column, at: Column, rest: Column, scan: Column) -> Column:
+    """Unescape, timestamp scrub, TrimSpace (sql_extractor.go:14-45);
+    '' without a Sql= marker or when the marker ends the record."""
+    raw = F.when(
+        F.length(scan) > 0, scan.substr(F.lit(1), F.length(scan) - 1)
+    ).otherwise(rest)
+    # Go's scanner never writes the escape byte (sql_extractor.go:30-37)
+    unescaped = F.regexp_replace(raw, r"(?s)\\(.)", "$1")
+    scrubbed = F.regexp_replace(
+        unescaped, r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}", ""
+    )
+    return F.when(
+        (at > 0) & (F.length(rec) >= at + 4), _trim_space(scrubbed)
+    ).otherwise(F.lit(""))
 
 
-def header_map(header_part: Column) -> Column:
+def _context_text(rec: Column, at: Column, ctx_at: Column, tail: Column) -> Column:
+    """Context to the LAST quote of its tail (context_extractor.go:12);
+    no quote keeps the whole tail.  Last-quote position via reverse+instr
+    — one linear pass instead of the greedy (?s)^(.*)' regex."""
+    last_q = F.length(tail) - F.instr(F.reverse(tail), "'") + 1
+    ctx = F.when(tail.contains("'"), tail.substr(F.lit(1), last_q - 1)).otherwise(tail)
+    return (
+        F.when((at > 0) & (F.length(rec) < at + 4), F.lit(""))
+        .when(ctx_at > 0, ctx)
+        .otherwise(F.lit(""))
+    )
+
+
+# A binder turns a stage of named expressions into the Columns later
+# stages use: either the expressions themselves (inline) or references
+# to columns computed once by a projection (see _Chain).
+Let = Callable[..., list]
+
+
+def _inline(**cols: Column) -> list[Column]:
+    return list(cols.values())
+
+
+class _Chain:
+    """Each call adds one projection holding the named columns and
+    returns references to them.  Spark's CollapseProject does not merge
+    a non-cheap producer that a consumer references more than once, so
+    every shared intermediate stays computed once in the optimized
+    plan, while the chain still compiles into one codegen stage."""
+
+    def __init__(self, df: DataFrame):
+        self.df = df
+
+    def __call__(self, **cols: Column) -> list[Column]:
+        self.df = self.df.withColumns(cols)
+        return [F.col(name) for name in cols]
+
+
+def _header_map(parts: Column, let: Let) -> Column:
     """key=value pairs from comma parts 3.. (parser.go:80-86): key
-    space-trimmed, value trimmed of spaces and single quotes, first '='
+    TrimSpace'd, value trimmed of spaces and single quotes, first '='
     splits, '=' at position 0 skipped, last duplicate wins."""
-    parts = F.split(header_part, ",")
     kv = F.slice(parts, 4, F.greatest(F.size(parts) - 3, F.lit(0)))
     # Go: eq := strings.Index(part, "="); eq > 0  => at least one char
     # before the '=' (1-based instr > 1)
     valid = F.filter(kv, lambda p: F.instr(p, "=") > 1)
-    entries = F.transform(
-        valid,
-        lambda p: F.struct(
-            F.trim(p.substr(F.lit(1), F.instr(p, "=") - 1)).alias("key"),
-            F.regexp_replace(
-                F.regexp_replace(
-                    p.substr(F.instr(p, "=") + 1, F.length(p)),
-                    r"^[ ']+",
-                    "",
+    (entries,) = let(
+        __lp_entries=F.transform(
+            valid,
+            lambda p: F.struct(
+                _trim_space(p.substr(F.lit(1), F.instr(p, "=") - 1)).alias("key"),
+                # strings.Trim(v, " '"): a character-set trim
+                F.trim(p.substr(F.instr(p, "=") + 1, F.length(p)), F.lit(" '")).alias(
+                    "value"
                 ),
-                r"[ ']+$",
-                "",
-            ).alias("value"),
-        ),
+            ),
+        )
     )
     # Go map assignment overwrites on duplicate keys (parser.go:84):
     # keep only the LAST occurrence of each key.  Done in-expression (an
@@ -213,12 +227,66 @@ def header_map(header_part: Column) -> Column:
     return F.map_from_entries(last_wins)
 
 
-def _entry_cols(hv, pos, fn: Column, sql_text: Column, context_text: Column) -> list[Column]:
-    """The 24 LogEntry output expressions (models.go:8-34) over accessor
-    callables, so the fused and split projection shapes share one
-    definition.  ``hv(go_key)`` = header value or '' (parser.go:91-96);
-    ``pos(i)`` = trimmed positional field or '' (Go guards each with a
-    len(parts) check, parser.go:71-77 -> try_element_at, missing -> '')."""
+class _Plane(NamedTuple):
+    header: Column
+    parts: Column
+    sql: Column
+    context: Column
+    header_map: Column
+
+
+def _parse_plane(rec: Column, let: Let) -> _Plane:
+    """The whole record split (parser.go:50-88), one ``let`` per stage
+    of intermediates that later stages share."""
+    (at,) = let(__lp_sql_at=F.instr(rec, "Sql="))  # 1-based, 0 if absent
+    header, quote, rest = let(
+        __lp_header=F.when(at > 0, rec.substr(F.lit(1), at - 1)).otherwise(rec),
+        __lp_quote=rec.substr(at + F.lit(4), F.lit(1)),  # '' at end of record
+        __lp_rest=rec.substr(at + F.lit(5), F.length(rec)),
+    )
+    scan, parts = let(__lp_scan=_sql_scan(rest, quote), __lp_parts=F.split(header, ","))
+    # Context comes from the remainder after SQL, or the whole record when
+    # there is no Sql= marker (parser.go:53-54, :65)
+    after = F.when(
+        F.length(scan) > 0, rest.substr(F.length(scan) + 1, F.length(rest))
+    ).otherwise(F.lit(""))
+    sql, ctx_source = let(
+        __lp_sql=_sql_text(rec, at, rest, scan),
+        __lp_ctx_source=F.when(at > 0, after).otherwise(rec),
+    )
+    (ctx_at,) = let(__lp_ctx_at=F.instr(ctx_source, ",Context='"))
+    (ctx_tail,) = let(
+        __lp_ctx_tail=ctx_source.substr(ctx_at + F.lit(10), F.length(ctx_source))
+    )
+    (context,) = let(__lp_context=_context_text(rec, at, ctx_at, ctx_tail))
+    (m,) = let(__lp_map=_header_map(parts, let))
+    return _Plane(header, parts, sql, context, m)
+
+
+def split_record(rec: Column) -> tuple[Column, Column, Column]:
+    """-> (header_part, sql_text, context_text), per ParseLogRecord
+    (parser.go:50-66), as inline expressions."""
+    p = _parse_plane(rec, _inline)
+    return p.header, p.sql, p.context
+
+
+def header_map(header_part: Column) -> Column:
+    """The last-wins key=value map of a header part, inline."""
+    return _header_map(F.split(header_part, ","), _inline)
+
+
+def _entry_cols(plane: _Plane, fn: Column) -> list[Column]:
+    """The 24 LogEntry output expressions (models.go:8-34).  ``hv(go_key)``
+    = header value or '' (parser.go:91-96); ``pos(i)`` = TrimSpace'd
+    positional field or '' (Go guards each with a len(parts) check,
+    parser.go:71-77 -> try_element_at, missing -> '')."""
+
+    def hv(go_key: str) -> Column:
+        return F.coalesce(F.element_at(plane.header_map, go_key), F.lit(""))
+
+    def pos(i: int) -> Column:
+        return F.coalesce(_trim_space(F.try_element_at(plane.parts, F.lit(i))), F.lit(""))
+
     return [
         fn.alias("Timestamp"),  # filename (tail.go:77)
         pos(1).alias("LogTimestamp"),
@@ -239,10 +307,10 @@ def _entry_cols(hv, pos, fn: Column, sql_text: Column, context_text: Column) -> 
         hv("DataBase").alias("Database"),
         parse_uint(hv("Trans"), _U32_MAX).alias("Trans"),
         parse_uint(hv("dbpid"), _U32_MAX).alias("DBPID"),
-        sql_text.alias("SQL"),
+        plane.sql.alias("SQL"),
         parse_int32(hv("Rows")).alias("Rows"),
         parse_int32(hv("RowsAffected")).alias("RowsAffected"),
-        context_text.alias("Context"),
+        plane.context.alias("Context"),
         hv("Event").alias("EventType"),
         hv("File").alias("File"),
         F.current_timestamp().alias("InsertedAt"),
@@ -260,35 +328,23 @@ def parse_records(
     Column types follow SURVEY.md §1.3 (unsigned Go ints -> long;
     InsertedAt = current_timestamp(), parser.go:42).
 
-    ``split_stages`` (r14, default ON; session conf
-    ``logpump.parse.splitProjection=false`` flips it): materialize the
-    shared intermediates — header map, positional parts, SQL tail,
-    Context tail — behind one round-robin exchange, so the projection
-    compiles as two roughly half-size codegen units instead of one.
-    This is the plan-shape fix for the documented parse-plane C2
-    compile storm (BASELINE.md): fresh-JVM-per-run A/B at sf0.1x10
-    (tools/ab_parse_split.py) measured the fused form entering the
-    storm in 4/10 JVMs (walls 21.4-39.3 s) vs 0/10 split (20.5-24.5 s,
-    median 23.6 vs 25.3 s) — the r8 JVM-knob sweep had already
-    exhausted every non-plan lever.  Cluster-scale trade, MEASURED
-    warm (r15, tools/ab_parse_warm, one warm JVM, decade corpus,
-    storms excluded by warmup): the exchange's warm tax is
-    zero-to-negative — split median 13.04 s vs fused 14.13 s — because
-    the plane is regex-CPU-bound at ~70 s wall/GB (local[32]) while
-    the corpus-sized exchange costs ~2% of that even on conservative
-    cluster shuffle throughput, and the rebalance it buys spreads the
-    regex work evenly regardless of upstream row-group layout.  Flip
-    the conf off only when executors are long-lived (per-JVM stall
-    amortized over >>3 GB parsed each) AND shuffle capacity — not
-    CPU — is the job's binding resource (SCALING.md §10.4 for the
-    numbers); the streaming pump ships fused for exactly that reason.
-    Correctness is identical either way (same expressions over the
-    same intermediates; parity + golden tests cover both shapes).
+    The parse is a chain of projections (``_parse_plane`` over
+    ``_Chain``): the Sql= index, header part, quote char and SQL tail;
+    the SQL scan and the comma-split header; SQL text, Context source
+    and header entries; Context index and tail; Context text and the
+    last-wins header map; then the 24 output columns.  Each shared
+    intermediate is computed once and referenced by name, so the
+    optimized plan stays small (no subtree is re-inlined per consumer)
+    and every micro-batch plans it quickly.  Intermediates carry the
+    ``__lp_`` prefix so a passthrough column cannot collide with them.
+
+    ``split_stages`` (session conf ``logpump.parse.splitProjection``,
+    default true) puts one round-robin exchange between the
+    intermediates and the 24-column projection, spreading the regex
+    work evenly whatever the upstream partition layout; the streaming
+    pump passes ``False`` because the exchange would recur on every
+    micro-batch.  Both shapes evaluate the same expressions.
     """
-    rec = F.col(record_col)
-    header_part, sql_text, context_text = split_record(rec)
-    parts = F.split(header_part, ",")
-    m = header_map(header_part)
     keep = [c for c in df.columns if c not in (record_col, filename_col)]
     if split_stages is None:
         split_stages = (
@@ -297,52 +353,20 @@ def parse_records(
             ).lower()
             == "true"
         )
-    if not split_stages:
-        def hv(go_key: str) -> Column:
-            return F.coalesce(F.element_at(m, go_key), F.lit(""))
-
-        def pos(i: int) -> Column:
-            return F.coalesce(F.trim(F.try_element_at(parts, F.lit(i))), F.lit(""))
-
-        return df.select(
-            *keep, *_entry_cols(hv, pos, F.col(filename_col), sql_text, context_text)
-        )
-
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Connect sessions expose no sparkContext
-        # fall back to the session's shuffle width, not a literal — a
-        # hardcoded 32 would underpartition the parse stage on a large
-        # cluster driven through Connect (ADVICE r14)
-        par = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    # __lp_-prefixed intermediates so a passthrough column in `keep`
-    # cannot collide and turn into an ambiguous-reference
-    # AnalysisException that only the split shape would hit (ADVICE r14)
-    _fn, _m, _p, _sql, _ctx = (
-        "__lp_parse_fn",
-        "__lp_parse_m",
-        "__lp_parse_p",
-        "__lp_parse_sql",
-        "__lp_parse_ctx",
-    )
-    mid = df.select(
-        *keep,
-        F.col(filename_col).alias(_fn),
-        m.alias(_m),
-        parts.alias(_p),
-        sql_text.alias(_sql),
-        context_text.alias(_ctx),
-    ).repartition(par)
-
-    def hv(go_key: str) -> Column:
-        return F.coalesce(F.element_at(F.col(_m), go_key), F.lit(""))
-
-    def pos(i: int) -> Column:
-        return F.coalesce(F.trim(F.try_element_at(F.col(_p), F.lit(i))), F.lit(""))
-
-    return mid.select(
-        *keep,
-        *_entry_cols(hv, pos, F.col(_fn), F.col(_sql), F.col(_ctx)),
-    )
+    chain = _Chain(df)
+    plane = _parse_plane(F.col(record_col), chain)
+    mid = chain.df
+    if split_stages:
+        try:
+            par = df.sparkSession.sparkContext.defaultParallelism
+        except Exception:  # Connect sessions expose no sparkContext
+            # fall back to the session's shuffle width, not a literal — a
+            # hardcoded 32 would underpartition the parse stage on a large
+            # cluster driven through Connect
+            par = int(
+                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+            )
+        mid = mid.select(
+            *keep, filename_col, plane.parts, plane.sql, plane.context, plane.header_map
+        ).repartition(par)
+    return mid.select(*keep, *_entry_cols(plane, F.col(filename_col)))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .parser import _U32_MAX, parse_uint
+from .parser import _U32_MAX, _Chain, parse_uint
 
 TECHLOG_COLUMNS = (
     "EventDate EventTime EventType Duration User InfoBase SessionID ClientID "
@@ -51,44 +51,54 @@ def _event_date_parts(ts: Column) -> tuple[Column, Column, Column]:
     hour_str = ts.substr(7, 2)
     # Atoi accepts a sign (transform.go:21); a negative/invalid hour then
     # fails the time parse and rejects the row either way
-    hour_ok = hour_str.rlike("^[+-]?[0-9]+$")
+    hour_ok = hour_str.rlike(r"^[+-]?[0-9]+\z")
     hour = F.when(hour_ok, hour_str.try_cast("int")).otherwise(F.lit(None))
     return date_str, hour, F.length(ts) >= 8
 
 
 def transform_entries(entries: DataFrame) -> DataFrame:
     """Add the TechLogRow columns + `_valid`/`_reject_reason` to a LogEntry
-    DataFrame.  One projection, no shuffle."""
+    DataFrame.  A chain of projections (parser._Chain), no shuffle: the
+    BOM-stripped LogTimestamp, the time match, the hour, the event time
+    and the reject reason are each referenced several times, so each is
+    computed once and referenced by name."""
+    let = _Chain(entries)
     ts = F.col("Timestamp")
     date_str, hour, len_ok = _event_date_parts(ts)
 
-    raw = F.regexp_replace(F.col("LogTimestamp"), "^\\uFEFF", "")  # BOM, transform.go:29
-    match = F.regexp_extract(raw, r"\d{2}:\d{2}\.\d{1,6}", 0)
+    raw, hour, event_date = let(
+        # BOM, transform.go:29
+        __lp_raw=F.regexp_replace(F.col("LogTimestamp"), "^\\uFEFF", ""),
+        __lp_hour=hour,
+        __lp_event_date=date_str.try_cast("date"),
+    )
+    (match,) = let(__lp_match=F.regexp_extract(raw, r"\d{2}:\d{2}\.\d{1,6}", 0))
     # Go time.Parse('...05.000000') demands exactly 6 fraction digits
-    match6 = match.rlike(r"^\d{2}:\d{2}\.\d{6}$")
+    match6 = match.rlike(r"^\d{2}:\d{2}\.\d{6}\z")
 
     event_time_str = F.concat(
         date_str, F.lit(" "), F.format_string("%02d", hour), F.lit(":"), match
     )
-    event_time = F.when(
-        match6, F.try_to_timestamp(event_time_str, F.lit("yyyy-MM-dd HH:mm:ss.SSSSSS"))
-    )
-    event_date = date_str.try_cast("date")
-
     dash_idx = F.instr(raw, "-")
     dur_str = F.when(dash_idx > 0, raw.substr(dash_idx + 1, F.length(raw)))
-    duration = parse_uint(F.coalesce(dur_str, F.lit("")), _U32_MAX)
+    event_time, duration = let(
+        __lp_event_time=F.when(
+            match6,
+            F.try_to_timestamp(event_time_str, F.lit("yyyy-MM-dd HH:mm:ss.SSSSSS")),
+        ),
+        __lp_duration=parse_uint(F.coalesce(dur_str, F.lit("")), _U32_MAX),
+    )
 
-    reject_reason = (
-        F.when(~len_ok, F.lit("bad_filename"))
+    (reject_reason,) = let(
+        __lp_reject_reason=F.when(~len_ok, F.lit("bad_filename"))
         .when(hour.isNull(), F.lit("bad_hour"))
         .when(event_date.isNull(), F.lit("bad_date"))
         .when(match == "", F.lit("no_time_match"))
         .when(event_time.isNull(), F.lit("bad_event_time"))
     )
 
-    return entries.select(
-        "*",
+    return let.df.select(
+        *entries.columns,
         event_date.alias("EventDate"),
         event_time.alias("EventTime"),
         F.col("Component").alias("EventTypeOut"),

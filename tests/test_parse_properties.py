@@ -1,6 +1,6 @@
 """Property-based tests: the Column-expression parser vs a direct Python
 model of the Go semantics (strconv grammar, ParseLogRecord splitting,
-extractSQL escape scan, extractContext last-quote).
+extractSQL escape scan, extractContext last-quote, the header map).
 
 The Python models here are TEST ORACLES transliterating the documented
 behavior of /root/reference/internal/parser/*.go for verification only —
@@ -16,11 +16,21 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from logpump_spark.techlog.parser import parse_int32, parse_uint, split_record
+from logpump_spark.techlog.parser import parse_int32, parse_records, parse_uint, split_record
 
 # ---------------------------------------------------------------------------
 # Python models of the Go behavior
 # ---------------------------------------------------------------------------
+
+# unicode.IsSpace, the set strings.TrimSpace strips (Python's str.strip()
+# also strips \x1c-\x1f, which Go keeps)
+GO_SPACE = (
+    "\t\n\v\f\r \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+# Go's \d is ASCII-only; Python's matches every Unicode digit
+_TS_LITERAL = r"[0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2}"
 
 def go_parse_uint(s: str, max_value: int) -> int:
     # strconv.ParseUint: syntax error -> 0; range error -> bit-size max
@@ -48,7 +58,7 @@ def go_extract_sql(s: str, quote: str) -> tuple[str, str]:
     while i < len(s):
         c = s[i]
         if c == quote and not in_escape:
-            sql = re.sub(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}", "", "".join(out)).strip()
+            sql = re.sub(_TS_LITERAL, "", "".join(out)).strip(GO_SPACE)
             return sql, s[i + 1 :]
         if c == "\\" and not in_escape:
             in_escape = True
@@ -56,7 +66,7 @@ def go_extract_sql(s: str, quote: str) -> tuple[str, str]:
             in_escape = False
             out.append(c)
         i += 1
-    sql = re.sub(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}", "", "".join(out)).strip()
+    sql = re.sub(_TS_LITERAL, "", "".join(out)).strip(GO_SPACE)
     return sql, ""
 
 
@@ -84,6 +94,39 @@ def go_split_record(raw: str) -> tuple[str, str, str]:
         raise NotImplementedError
     sql, after = go_extract_sql(rest, quote)
     return header, sql, go_extract_context(after)
+
+
+def go_header_map(header: str) -> dict[str, str]:
+    # parser.go:80-86: parts 3.., split on the first '=' (eq > 0), key
+    # TrimSpace'd, value strings.Trim(v, " '"); map assignment, so the
+    # last duplicate wins
+    m = {}
+    for part in header.split(",")[3:]:
+        eq = part.find("=")
+        if eq > 0:
+            m[part[:eq].strip(GO_SPACE)] = part[eq + 1 :].strip(" '")
+    return m
+
+
+def go_parse_record(raw: str, filename: str) -> tuple:
+    """The 23 deterministic LogEntry fields (models.go:8-34; InsertedAt
+    is the wall clock), in parse_records' column order."""
+    header, sql, ctx = go_split_record(raw)
+    parts = header.split(",")
+    pos = [parts[i].strip(GO_SPACE) if i < len(parts) else "" for i in range(3)]
+    m = go_header_map(header)
+    hv = lambda k: m.get(k, "")
+    u32 = lambda k: go_parse_uint(hv(k), 2**32 - 1)
+    return (
+        filename, pos[0], pos[1], go_parse_uint(pos[2], 255),
+        hv("level"), hv("process"), hv("p:processName"),
+        u32("OSThread"), u32("t:clientID"),
+        hv("t:applicationName"), hv("t:computerName"), u32("t:connectID"),
+        go_parse_uint(hv("SessionID"), 2**63 - 1),
+        hv("Usr"), hv("DBMS"), hv("DataBase"), u32("Trans"), u32("dbpid"),
+        sql, go_parse_int32(hv("Rows")), go_parse_int32(hv("RowsAffected")),
+        ctx, hv("Event"), hv("File"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -147,19 +190,93 @@ def test_split_record_matches_go(spark, bodies):
 
 
 # ---------------------------------------------------------------------------
-# r14: the split (two-codegen-stage) and fused projection shapes of the
-# FULL 24-field parse_records must agree on arbitrary record bodies, not
-# just the golden corpus — same expressions over the same intermediates
-# is the correctness argument for the C2-storm plan-shape fix, so pin it
-# property-style where the golden file can't reach (adversarial quoting,
-# truncated headers, unicode, embedded newlines).
+# The full parse_records against the Go model: 23 deterministic fields on
+# arbitrary bodies and on structured records that reach every branch
+# (Sql= with either quote, escapes, unterminated quotes, timestamp
+# literals, Context, duplicate and numeric header keys, Unicode spaces).
+
+_space = st.sampled_from([" ", "  ", "\t", "\n", "\u3000", "\xa0", ""])
+_token = st.text(alphabet=st.sampled_from(list("aZ19 Ф.:-+'=\\")), max_size=8)
+_value = st.one_of(
+    _token,
+    st.integers(min_value=-(2**65), max_value=2**65).map(str),
+    st.builds("{}{}{}".format, _space, _token, _space),
+    st.builds("'{}'".format, _token),
+)
+_key = st.one_of(
+    st.sampled_from(
+        ["level", "process", "p:processName", "OSThread", "t:clientID",
+         "t:applicationName", "t:computerName", "t:connectID", "SessionID",
+         "Usr", "DBMS", "DataBase", "Trans", "dbpid", "Rows", "RowsAffected",
+         "Event", "File"]
+    ),
+    _token,
+)
+_kv = st.builds("{}{}{}={}".format, _space, _key, _space, _value)
+_sql_body = st.lists(
+    st.sampled_from(
+        ["a", "Z", "1", " ", "\n", "\t", "\\", "'", '"', "Ф", ",",
+         "2025-05-26 07:00:00", ",Context='", "\u3000"]
+    ),
+    max_size=12,
+).map("".join)
+_sql = st.one_of(
+    st.just(""),
+    st.builds("Sql='{}'".format, _sql_body),
+    st.builds('Sql="{}"'.format, _sql_body),
+    st.builds("Sql='{}".format, _sql_body),  # unterminated
+    st.just("Sql="),  # the marker ends the record
+)
+_context = st.one_of(
+    st.just(""), st.builds(",Context='{}'".format, _sql_body),
+    st.builds(",Context={}".format, _sql_body),
+)
+
+
+@st.composite
+def structured_record(draw) -> str:
+    head = ",".join(draw(st.lists(_token, min_size=0, max_size=3)))
+    fields = [head, *draw(st.lists(_kv, max_size=6))]
+    sql = draw(_sql)
+    if sql:
+        fields.append(sql)
+    return ",".join(fields) + draw(_context)
+
+
+def _eval_parse(spark, records: list[str]) -> list[tuple]:
+    df = spark.createDataFrame(
+        [(i, r, f"f{i}.log") for i, r in enumerate(records)],
+        "i int, record string, filename string",
+    )
+    out = parse_records(df).drop("InsertedAt").orderBy("i").collect()
+    return [tuple(r)[1:] for r in out]
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.one_of(body, structured_record()), min_size=1, max_size=25))
+def test_parse_records_matches_go(spark, bodies):
+    records = []
+    for b in bodies:
+        try:
+            go_split_record(b)
+        except NotImplementedError:
+            continue  # non-quote delimiter after Sql=: out of modeled space
+        records.append(b)
+    if not records:
+        return
+    got = _eval_parse(spark, records)
+    want = [go_parse_record(r, f"f{i}.log") for i, r in enumerate(records)]
+    for rec, g, w in zip(records, got, want):
+        assert g == w, f"record {rec!r}:\nspark={g}\ngo=   {w}"
+
+
+# Both projection shapes of the FULL 24-field parse_records must agree on
+# arbitrary record bodies, not just the golden corpus.
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(body, min_size=1, max_size=20))
 def test_parse_records_split_and_fused_agree(spark, bodies):
-    from logpump_spark.techlog.parser import parse_records
-
     df = spark.createDataFrame(
         [(b, f"f{i}.log") for i, b in enumerate(bodies)],
         "record string, filename string",

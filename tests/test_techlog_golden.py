@@ -242,10 +242,10 @@ def test_crlf_records(spark, tmp_path):
 
 
 def test_split_and_fused_projection_shapes_identical(spark, logdir):
-    # r14: parse_records compiles as two codegen units by default (the
-    # C2-storm plan-shape fix); the fused single-projection form stays
-    # reachable via split_stages=False / the session conf — both shapes
-    # must produce identical rows and schema on the golden corpus
+    # parse_records puts a round-robin exchange between its intermediates
+    # and the 24-column projection by default; split_stages=False / the
+    # session conf drops it — both shapes must produce identical rows and
+    # schema on the golden corpus
     files = read_techlog(spark, logdir, glob="*.log")
     recs = records_from_text(files)
     split = parse_records(recs, split_stages=True).drop("InsertedAt")
@@ -256,11 +256,10 @@ def test_split_and_fused_projection_shapes_identical(spark, logdir):
 
 
 def test_split_shape_survives_collidable_passthrough_columns(spark, logdir):
-    # r15 (ADVICE r14): the split path's intermediates are now
-    # __lp_-prefixed — a passthrough column that happens to carry one
-    # of the OLD internal names (_m, _p, _sql...) must flow through the
-    # split shape unharmed instead of raising an ambiguous-reference
-    # AnalysisException only that shape would hit
+    # the parse chain's intermediates are __lp_-prefixed, so passthrough
+    # columns with short internal-looking names (_m, _sql...) flow
+    # through either shape unharmed instead of raising an
+    # ambiguous-reference AnalysisException
     from pyspark.sql import functions as F
 
     files = read_techlog(spark, logdir, glob="*.log")
@@ -269,7 +268,67 @@ def test_split_shape_survives_collidable_passthrough_columns(spark, logdir):
         .withColumn("_m", F.lit("keepme"))
         .withColumn("_sql", F.lit(7))
     )
-    out = parse_records(recs, split_stages=True)
-    assert "_m" in out.columns and "_sql" in out.columns
-    row = out.select("_m", "_sql").first()
-    assert (row["_m"], row["_sql"]) == ("keepme", 7)
+    for split_stages in (True, False):
+        out = parse_records(recs, split_stages=split_stages)
+        assert "_m" in out.columns and "_sql" in out.columns
+        assert not [c for c in out.columns if c.startswith("__lp_")]
+        row = out.select("_m", "_sql").first()
+        assert (row["_m"], row["_sql"]) == ("keepme", 7)
+
+
+# The LogEntry contract (models.go:8-34; SURVEY.md §1.3), nullability
+# included, for assembled records (non-null record and filename).
+LOG_ENTRY_SCHEMA = [
+    ("Timestamp", "string", False),
+    ("LogTimestamp", "string", False),
+    ("Component", "string", False),
+    ("Severity", "smallint", True),
+    ("Level", "string", False),
+    ("Process", "string", False),
+    ("ProcessName", "string", False),
+    ("OSThread", "bigint", True),
+    ("ClientID", "bigint", True),
+    ("ApplicationName", "string", False),
+    ("ComputerName", "string", False),
+    ("ConnectID", "bigint", True),
+    ("SessionID", "bigint", True),
+    ("User", "string", False),
+    ("DBMS", "string", False),
+    ("Database", "string", False),
+    ("Trans", "bigint", True),
+    ("DBPID", "bigint", True),
+    ("SQL", "string", False),
+    ("Rows", "int", True),
+    ("RowsAffected", "int", True),
+    ("Context", "string", False),
+    ("EventType", "string", False),
+    ("File", "string", False),
+    ("InsertedAt", "timestamp", False),
+]
+
+
+@pytest.mark.parametrize("split_stages", [True, False])
+def test_parse_records_schema_pinned(spark, logdir, split_stages):
+    recs = records_from_text(read_techlog(spark, logdir, glob="*.log"))
+    schema = parse_records(recs, split_stages=split_stages).schema
+    got = [(f.name, f.dataType.simpleString(), f.nullable) for f in schema]
+    assert got == LOG_ENTRY_SCHEMA
+    assert all(not f.metadata for f in schema)
+
+
+def test_parse_plan_computes_shared_intermediates_once(spark):
+    # every shared intermediate of the parse chain is a named column
+    # computed once; a Column re-inlined into each consumer would
+    # multiply these (the pre-chain plan held 56 exists and 34
+    # regexp_extract, and every micro-batch planned all of them)
+    from logpump_spark.techlog.transform import transform_entries
+
+    df = spark.createDataFrame([("a", "f.log")], "record string, filename string")
+    entries = parse_records(df, split_stages=False)
+    plan = entries._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("exists(") == 1, plan
+    assert plan.count("regexp_extract") <= 2, plan
+    # the transform adds one time-match extract on top, not a copy per use
+    plan = transform_entries(entries)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("exists(") == 1, plan
+    assert plan.count("regexp_extract") <= 3, plan
